@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `.explain("formatted")` for named catalog queries.
   * Usage: runMain graft.Plans <sfDir> <outDir> <suffix> q74_dedup_clusters [more...]
   * Writes <outDir>/<name>_<suffix>.txt per query. Same session shape as Bench.
@@ -13,11 +11,7 @@ object Plans {
     val suffix = args(2)
     val names = args.drop(3)
     java.nio.file.Files.createDirectories(outDir)
-    val spark = GraftSession.tuned(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")).getOrCreate()
+    val spark = GraftSession.local("graft-plans", 32)
     spark.sparkContext.setLogLevel("WARN")
     for (name <- names) {
       val df = SparkEntry.queries(name)(spark, sfDir)

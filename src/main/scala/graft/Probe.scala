@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev probe: time named catalog queries individually (n runs each).
   * Usage: runMain graft.Probe <sfDir> <n> q74_dedup_clusters [more...]
   */
@@ -10,11 +8,7 @@ object Probe {
     val sfDir = args(0)
     val n = args(1).toInt
     val names = args.drop(2)
-    val spark = GraftSession.tuned(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")).getOrCreate()
+    val spark = GraftSession.local("graft-probe", 32)
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000L).selectExpr("sum(id)").collect()
     for (name <- names) {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 import scala.collection.mutable
 
@@ -13,11 +12,7 @@ object ProbeJobs {
     val sfDir = args(0)
     val name = args(1)
     val warm = args.lift(2).map(_.toInt).getOrElse(1)
-    val spark = GraftSession.tuned(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")).getOrCreate()
+    val spark = GraftSession.local("graft-probe-jobs", 32)
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000L).selectExpr("sum(id)").collect()
     val fn = SparkEntry.queries(name)

@@ -31,110 +31,6 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Pin a STATIC relation of an iterative operator in memory,
-    * pre-partitioned by the key its per-round join uses, and
-    * materialize it. Unpersist is the caller's job when the relation
-    * does not back the returned frame (otherwise the ContextCleaner +
-    * the session's 1min periodic GC reclaim it, the standing
-    * checkpoint-block contract).
-    */
-  private[ext] def pinByKey(df: DataFrame, keys: Column*): DataFrame =
-    pinByKeyTracked(df, keys: _*)._1
-
-  /** [[pinByKey]] + the persistent-RDD ids for callers that free the
-    * pin explicitly once the rounds are done (the CC/kCore shape).
-    */
-  private[ext] def pinByKeyTracked(df: DataFrame, keys: Column*): (DataFrame, Set[Int]) = {
-    val (out, ids, _) = pinByKeyTrackedN(df, keys: _*)
-    (out, ids)
-  }
-
-  /** [[pinByKeyTracked]] + the pin's derived partition count, for
-    * callers that build a SECOND pin of the same relation keyed
-    * differently (the HITS dual-key shape).
-    *
-    * Two passes. Pass 1 materializes the relation once under normal
-    * AQE planning and reads its real stored size; pass 2 re-keys the
-    * BLOCKS (not the lineage) into `clamp(bytes/advisory, 1,
-    * shuffle.partitions)` hash partitions, SORTED by the key, via
-    * [[pinEagerTracked]]. Partition-count rationale (guide §2): the
-    * co-partitioned per-round join must match the pin's partitioning
-    * exactly, so AQE can never coalesce those round stages — a pin at
-    * raw shuffle.partitions forced 3×32-task stages per round over an
-    * 0.4 MB sf0.1 graph (ProbeJobs: round wall ~0.5 s of pure task
-    * overhead, 2× the un-pinned shape). Deriving the count from the
-    * measured size — one partition per advisoryPartitionSizeInBytes,
-    * the same target AQE coalesces to — keeps rounds at the task
-    * count the data warrants at ANY scale, capped at
-    * shuffle.partitions (the per-deploy knob). The SORT is captured
-    * into the checkpoint's outputOrdering, so per-round sort-merge
-    * joins read the pinned side with no Exchange AND no Sort (the
-    * bucketed+sorted-table shape); partitioning alone measured 20-50%
-    * slower (q205/q153) — it traded the round's Exchange for an
-    * edge-sized per-round SortExec.
-    */
-  private[ext] def pinByKeyTrackedN(df: DataFrame, keys: Column*): (DataFrame, Set[Int], Int) = {
-    val spark = df.sparkSession
-    val sc = spark.sparkContext
-    val (flat, flatIds) = checkpointLock.synchronized {
-      val pre = sc.getPersistentRDDs.keySet
-      val out = df.localCheckpoint()
-      (out, sc.getPersistentRDDs.keySet.diff(pre).toSet)
-    }
-    val bytes = sc.getRDDStorageInfo
-      .filter(i => flatIds.contains(i.id)).map(i => i.memSize + i.diskSize).sum
-    // AQE's own parallelismFirst coalescing policy, applied to the pin:
-    // partition target = bytes/parallelism clamped to [minPartitionSize,
-    // advisorySize], count capped at shuffle.partitions — big relations
-    // keep every core busy, small ones don't spray task-overhead across
-    // rounds (a raw shuffle.partitions pin measured 2× on sf0.1 graphs)
-    def confBytes(key: String, dflt: String): Long =
-      org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        spark.conf.get(key, dflt))
-    val advisory = confBytes("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB")
-    val minSize = confBytes("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1MB")
-    val maxN = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    val target = math.max(minSize,
-      math.min(advisory, bytes / math.max(1, sc.defaultParallelism)))
-    val n = math.max(1L, math.min(maxN.toLong, (bytes + target - 1) / target)).toInt
-    val out = pinEagerTracked(
-      flat.repartition(n, keys: _*).sortWithinPartitions(keys: _*))
-    freeIds(sc, flatIds) // the sized pin replaces the flat one
-    (out._1, out._2, n)
-  }
-
-  /** EAGER localCheckpoint with AQE disabled while the pin's own plan
-    * is built and executed, so the LogicalRDD captures the plan's real
-    * output partitioning (`hashpartitioning(key, shuffle.partitions)`)
-    * and every downstream join keyed the same way skips its Exchange.
-    * Under AQE the executed plan is an AdaptiveSparkPlanExec, which
-    * reports UnknownPartitioning(0) into the checkpoint — round 17
-    * shipped that shape and its after-plans still re-exchanged the
-    * pinned relation every round (measured in [[graft.PinProbe]]:
-    * variant A re-exchanges, variant B does not). AQE is restored in a
-    * `finally`; the whole pin (a session-global conf flip + one Spark
-    * job) runs under [[checkpointLock]], which serializes graft
-    * checkpointers — concurrent NON-graft queries on the same session
-    * would plan AQE-less during the window (the bench and oracle
-    * drivers are single-threaded; callers sharing a session with alien
-    * query threads should serialize externally, the standing caveat).
-    * Never persist() here: the CacheManager matches cached plans by
-    * equality ACROSS invocations, which would let a later run of the
-    * same query skip recomputing the inputs entirely.
-    */
-  private[ext] def pinEagerTracked(df: DataFrame): (DataFrame, Set[Int]) =
-    checkpointLock.synchronized {
-      val spark = df.sparkSession
-      val sc = spark.sparkContext
-      val aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-      val pre = sc.getPersistentRDDs.keySet
-      try {
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        val out = df.localCheckpoint()
-        (out, sc.getPersistentRDDs.keySet.diff(pre).toSet)
-      } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    }
-
   /** Connected components of an undirected graph given as an edge list.
     * Returns one row per node that appears in any edge: (id, comp) where
     * comp is the smallest node id in the component. Self-loops are
@@ -145,84 +41,61 @@ object Graph {
       srcCol: String,
       dstCol: String,
       maxIter: Int = 25): DataFrame = {
-    val sc = edges.sparkSession.sparkContext
     // localCheckpoint blocks are freed by the ContextCleaner only
     // after a DRIVER GC proves the RDD unreachable — on a big heap that
-    // can be "never", so each superseded round's blocks are unpersisted
-    // EXPLICITLY the moment the next round is materialized. The
-    // checkpoint is LAZY (eager = false): persist registration happens
-    // synchronously at the call — that's what the id diff captures —
-    // while the blocks themselves materialize at the round's count()
-    // action, outside the lock. (The EAGER pins in [[pinEagerTracked]]
-    // DO run their one materialization job under the lock: it also
-    // brackets the session-wide AQE flip, so concurrent graft
-    // checkpointers serialize across that job.) CAVEAT (unfixable at
-    // the public-API level — RDD ids carry no ownership): a NON-graft
-    // thread calling localCheckpoint on the same SparkContext inside
-    // the (tiny) lock window would have its id mis-captured, and
-    // unpersisting a checkpointed RDD is unrecoverable (the blocks ARE
-    // the data once lineage is truncated). Callers sharing a session
-    // with alien checkpointing threads should serialize externally.
-    def checkpointed(df: DataFrame): (DataFrame, Set[Int]) = checkpointTracked(df)
-    def free(ids: Set[Int]): Unit = freeIds(sc, ids)
-
+    // can be "never", so each superseded round's pin is freed
+    // EXPLICITLY the moment the next round is materialized
     val e = edges.select(col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("d"))
     // undirected: keep both orientations so one join propagates both
     // ways; pinned CO-PARTITIONED on the round join key so each round
     // exchanges only the node-sized label state, never the edges
-    val (bidir, bidirIds) = pinByKeyTracked(
+    val bidir = Pin.byKey(
       e.union(e.select(col("d").as("s"), col("s").as("d")))
         .filter(col("s") =!= col("d"))
         .distinct(), col("s"))
     // Initial labels fold the first relax in: comp = min(id, neighbors).
     // The plain id-labeled start would spend a whole round reaching this.
-    var (lbl, lblIds) = checkpointed(
-      bidir.groupBy(col("s").as("id"))
-        .agg(least(min(col("d")), col("s")).as("comp")))
-    // every label-generation checkpoint id currently persisted — ids
-    // leave this set ONLY via free(), so a mid-round failure (e.g. the
-    // count() aborting after the new round's checkpoint registered)
-    // still frees everything in the finally
-    var liveIds = lblIds
+    var lbl = Pin(
+      bidir.df.groupBy(col("s").as("id"))
+        .agg(least(min(col("d")), col("s")).as("comp")), eager = false)
+    // the generation lbl replaced; both are freed on a mid-round failure
+    var prev = lbl
     var iter = 0
     var changed = 1L
     var converged = false
     try {
       while (changed > 0 && iter < maxIter) {
-        val offers = bidir
-          .join(lbl.withColumnRenamed("id", "s"), "s")
+        val cur = lbl.df.select("id", "comp")
+        val offers = bidir.df
+          .join(cur.withColumnRenamed("id", "s"), "s")
           .select(col("d").as("id"), col("comp"), lit(null).cast("long").as("__old"))
         // __old rides the round through (exactly one lbl row per id, so
         // max-ignoring-nulls recovers it) — convergence is then a filter
         // on the checkpointed output, not a second join against lbl
-        val relaxed = lbl.select(col("id"), col("comp"), col("comp").as("__old"))
+        val relaxed = cur.select(col("id"), col("comp"), col("comp").as("__old"))
           .union(offers)
           .groupBy("id").agg(min("comp").as("comp"), max("__old").as("__old"))
         // every comp value is itself a node id, so the jump join is total
-        val (jumped, jumpedIds) = checkpointed( // truncate lineage: consumed twice
+        prev = lbl
+        lbl = Pin( // truncate lineage: consumed twice
           relaxed
             .join(
               relaxed.select(col("id").as("comp"), col("comp").as("__cc")),
               Seq("comp"))
-            .select(col("id"), col("__cc").as("comp"), col("__old")))
-        liveIds ++= jumpedIds
-        changed = jumped.filter(col("comp") =!= col("__old")).count()
-        free(lblIds) // previous round fully consumed — drop its blocks now
-        liveIds --= lblIds
-        lbl = jumped.select("id", "comp")
-        lblIds = jumpedIds
+            .select(col("id"), col("__cc").as("comp"), col("__old")), eager = false)
+        changed = lbl.df.filter(col("comp") =!= col("__old")).count()
+        prev.free() // previous round fully consumed — drop its blocks now
         iter += 1
       }
       require(changed == 0,
         s"connectedComponents: no fixpoint after $maxIter rounds (graph diameter > 2^$maxIter?)")
       converged = true
-      lbl
+      lbl.df.select("id", "comp")
     } finally {
-      // explicit-free invariant holds on error paths too: the edge
-      // relation is always done with; label-generation blocks are kept
-      // only when they back the returned fixpoint
-      free(bidirIds)
-      if (!converged) free(liveIds)
+      // the edge relation is always done with; label-generation blocks
+      // are kept only when they back the returned fixpoint
+      bidir.free()
+      if (!converged) { prev.free(); lbl.free() }
     }
   }
 
@@ -277,61 +150,58 @@ object Graph {
     require(rankUnit >= 1000000L && rankUnit % 1000000L == 0L &&
       rankUnit <= 1000000000000L,
       s"pageRank: rankUnit must be a multiple of 1e6 in [1e6, 1e12], got $rankUnit")
-    val sc = edges.sparkSession.sparkContext
     // static relations pinned CO-PARTITIONED on the per-round join key
-    // (eager AQE-less checkpoints — see [[pinEagerTracked]]): each of
-    // the `iters` rounds then exchanges only the node-sized rank
-    // state, never the edge relation (guide-§2.4 shape — the edge
-    // Exchange used to run every round). deg is derived from the pinned
-    // edges (already clustered on __src, so its groupBy needs no
-    // exchange) and pinned itself: it feeds two joins per round plus
-    // the rank init, and the pin carries hashpartitioning(__src) into
-    // all of them.
-    val e = pinByKey(
+    // ([[Pin.byKey]]): each of the `iters` rounds then exchanges only
+    // the node-sized rank state, never the edge relation (guide-§2.4
+    // shape — the edge Exchange used to run every round). deg is
+    // derived from the pinned edges (already clustered on __src, so its
+    // groupBy needs no exchange) and pinned itself: it feeds two joins
+    // per round plus the rank init, and the pin carries
+    // hashpartitioning(__src) into all of them.
+    val e = Pin.byKey(
       edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
         .distinct(), col("__src"))
-    val deg = pinEagerTracked(
-      e.groupBy(col("__src")).agg(count(lit(1)).as("__deg")))._1
-    val n = deg.count()
-    require(n > 0, "pageRank: no edges")
-    require(rankUnit / n >= 100L,
-      s"pageRank: rankUnit=$rankUnit gives only ${rankUnit / n} units of rank per node " +
-        s"for $n nodes (need >= 100, or floor-truncation silently decays every rank " +
-        "toward 0); raise rankUnit (e.g. 10^9 for graphs past ~10^4 nodes)")
-    var r = deg.select(col("__src").as("node"), lit(rankUnit / n).as("rank_ppm"))
-    val baseR = (rankUnit / 1000000L * (1000000L - dampPpm)) / n
-    // Each round adds 3 joins to the rank lineage; at iters=50 an
-    // uncheckpointed chain would nest a 150-join analyzer tree and a
-    // task retry would recompute the whole history. Cadence checkpoint:
-    // every 5 rounds truncate the lineage (materialized by an explicit
-    // count) and free the superseded round's blocks — the same
-    // explicit-free invariant as connectedComponents. The final round's
-    // blocks are kept: they back the returned (lazy) relation.
-    var ckIds = Set.empty[Int]
+    var deg: Pin = null
+    var ck: Pin = null
     try {
+      deg = Pin(e.df.groupBy(col("__src")).agg(count(lit(1)).as("__deg")), eager = true)
+      val n = deg.df.count()
+      require(n > 0, "pageRank: no edges")
+      require(rankUnit / n >= 100L,
+        s"pageRank: rankUnit=$rankUnit gives only ${rankUnit / n} units of rank per node " +
+          s"for $n nodes (need >= 100, or floor-truncation silently decays every rank " +
+          "toward 0); raise rankUnit (e.g. 10^9 for graphs past ~10^4 nodes)")
+      var r = deg.df.select(col("__src").as("node"), lit(rankUnit / n).as("rank_ppm"))
+      val baseR = (rankUnit / 1000000L * (1000000L - dampPpm)) / n
+      // Each round adds 3 joins to the rank lineage; at iters=50 an
+      // uncheckpointed chain would nest a 150-join analyzer tree and a
+      // task retry would recompute the whole history. Cadence
+      // checkpoint: every 5 rounds truncate the lineage (eager pin) and
+      // free the superseded one. The final round's pin is kept: with e
+      // and deg it backs the returned (lazy) relation.
       for (i <- 1 to iters) {
-        val inflow = e
+        val inflow = e.df
           .join(r.withColumnRenamed("node", "__src"), "__src")
-          .join(deg, "__src")
+          .join(deg.df, "__src")
           .select(col("__dst"), expr("rank_ppm div __deg").as("__c"))
           .groupBy(col("__dst"))
           .agg(sum(col("__c")).as("__s"))
-        r = deg.select(col("__src").as("node"))
+        r = deg.df.select(col("__src").as("node"))
           .join(inflow.withColumnRenamed("__dst", "node"), Seq("node"), "left")
           .select(col("node"),
             (lit(baseR) + expr(s"${dampPpm}L * coalesce(__s, 0L) div 1000000L"))
               .as("rank_ppm"))
         if (i % 5 == 0 && i < iters) {
-          val (ck, ids) = checkpointTracked(r)
-          ck.count()
-          freeIds(sc, ckIds)
-          ckIds = ids
-          r = ck
+          val next = Pin(r, eager = true)
+          if (ck != null) ck.free()
+          ck = next
+          r = next.df
         }
       }
       r
     } catch {
-      case t: Throwable => freeIds(sc, ckIds); throw t
+      // on success e, deg and the last cadence pin back the result
+      case t: Throwable => Seq(e, deg, ck).foreach(p => if (p != null) p.free()); throw t
     }
   }
 
@@ -364,7 +234,6 @@ object Graph {
     require(iters >= 1 && iters <= 50, s"hits: iters in [1,50], got $iters")
     import org.apache.spark.sql.types.DecimalType
     val dec = DecimalType(38, 0)
-    val sc = edges.sparkSession.sparkContext
     // The distinct edge relation is pinned TWICE, once per half-round
     // join key (auth rounds join on __s, hub rounds on __d): each
     // half-round then reads co-partitioned edge blocks and shuffles
@@ -372,61 +241,66 @@ object Graph {
     // single unkeyed checkpoint re-exchanging the edges 2·iters times.
     // eD derives from eS's blocks (one extra edge exchange at pin
     // time, not a recompute of the dedup chain).
-    val (eS, eSIds, nPart) = pinByKeyTrackedN(
+    val eS = Pin.byKey(
       edges.select(col(srcCol).as("__s"), col(dstCol).as("__d")).distinct(),
       col("__s"))
-    val (eD, eDIds) = pinEagerTracked(
-      eS.repartition(nPart, col("__d")).sortWithinPartitions(col("__d")))
-    require(eS.count() > 0, "hits: no edges")
-    // ℓ∞-normalize a raw (node, __r) relation to ppm via one
-    // single-row broadcast of the max — no driver round-trip
-    def norm(raw: DataFrame, as: String): DataFrame = raw
-      .crossJoin(broadcast(raw.agg(max(col("__r")).as("__mx"))))
-      .select(col("node"),
-        expr("CAST(__r * 1000000 div __mx AS BIGINT)").as(as))
-    var hub = eS.select(col("__s").as("node")).distinct()
-      .withColumn("h", lit(1000000L))
-    var auth: DataFrame = null
+    var eD: Pin = null
     // each half-round's raw aggregate feeds BOTH the max broadcast and
     // the normalized output (two consumers), so it is checkpointed
-    // before norm() — the q147/q218 multi-consumer-pin lesson. Lazy +
-    // count, NOT an eager AQE-less pin: the node-sized round state
-    // re-exchanges onto the edge pin's partitioning each half-round
-    // (cheap), while the round job keeps AQE's partition coalescing —
-    // eager-pinning the state forced raw-shuffle-partition-count
-    // stages over node-sized data, pure task overhead at any SF where
-    // nodes are small. The superseded round's node-sized blocks are
+    // before norm() — the q147/q218 multi-consumer-pin lesson. The
+    // node-sized round state re-exchanges onto the edge pin's
+    // partitioning each half-round (cheap), while the round job keeps
+    // AQE's partition coalescing. The superseded round's pins are
     // freed one round later (the round-i join reads round-(i−1) state
-    // during its own materialization), and the final round's blocks
-    // stay to back the returned lazy relation.
-    var prevIds = Set.empty[Int]
-    for (i <- 1 to iters) {
-      // rawA's checkpoint stays LAZY: its blocks materialize inside
-      // rawH's one action (the max broadcast and the join both read
-      // the same blocks — localCheckpoint computes them once), so a
-      // full round costs ONE driver action instead of two. Freeing
-      // round i−1 after rawH.count() is still safe: round i's rawA and
-      // rawH are both materialized by then.
-      val (rawA, idsA) = checkpointTracked(
-        eS.join(hub.withColumnRenamed("node", "__s"), "__s")
-          .groupBy(col("__d").as("node"))
-          .agg(sum(col("h").cast(dec)).as("__r")))
-      auth = norm(rawA, "a")
-      val (rawH, idsH) = checkpointTracked(
-        eD.join(auth.withColumnRenamed("node", "__d"), "__d")
-          .groupBy(col("__s").as("node"))
-          .agg(sum(col("a").cast(dec)).as("__r")))
-      rawH.count()
-      hub = norm(rawH, "h")
-      freeIds(sc, prevIds)
-      prevIds = idsA ++ idsH
+    // during its own materialization), and the final round's pins stay
+    // to back the returned lazy relation.
+    var prev = Seq.empty[Pin]
+    var cur = Seq.empty[Pin]
+    var done = false
+    try {
+      require(eS.df.count() > 0, "hits: no edges")
+      eD = Pin(eS.df.repartition(eS.numPartitions, col("__d"))
+        .sortWithinPartitions(col("__d")), eager = true)
+      // ℓ∞-normalize a raw (node, __r) relation to ppm via one
+      // single-row broadcast of the max — no driver round-trip
+      def norm(raw: DataFrame, as: String): DataFrame = raw
+        .crossJoin(broadcast(raw.agg(max(col("__r")).as("__mx"))))
+        .select(col("node"),
+          expr("CAST(__r * 1000000 div __mx AS BIGINT)").as(as))
+      var hub = eS.df.select(col("__s").as("node")).distinct()
+        .withColumn("h", lit(1000000L))
+      var auth: DataFrame = null
+      for (i <- 1 to iters) {
+        // rawA stays LAZY: its blocks materialize inside rawH's eager
+        // pin (the max broadcast and the join both read the same
+        // blocks — localCheckpoint computes them once), so a full round
+        // costs ONE driver action instead of two
+        val rawA = Pin(
+          eS.df.join(hub.withColumnRenamed("node", "__s"), "__s")
+            .groupBy(col("__d").as("node"))
+            .agg(sum(col("h").cast(dec)).as("__r")), eager = false)
+        cur = Seq(rawA)
+        auth = norm(rawA.df, "a")
+        val rawH = Pin(
+          eD.df.join(auth.withColumnRenamed("node", "__d"), "__d")
+            .groupBy(col("__s").as("node"))
+            .agg(sum(col("a").cast(dec)).as("__r")), eager = true)
+        cur :+= rawH
+        hub = norm(rawH.df, "h")
+        prev.foreach(_.free())
+        prev = cur
+      }
+      done = true
+      auth.select(lit("auth").as("side"), col("node"), col("a").as("score_ppm"))
+        .unionByName(
+          hub.select(lit("hub").as("side"), col("node"), col("h").as("score_ppm")))
+    } finally {
+      // every round is materialized; the returned relation reads only
+      // the final round's pins, so the edge pins always go
+      eS.free()
+      if (eD != null) eD.free()
+      if (!done) (prev ++ cur).foreach(_.free())
     }
-    // every round is materialized; the returned relation reads only the
-    // final rawA/rawH blocks, so the edge pins can go now
-    freeIds(sc, eSIds ++ eDIds)
-    auth.select(lit("auth").as("side"), col("node"), col("a").as("score_ppm"))
-      .unionByName(
-        hub.select(lit("hub").as("side"), col("node"), col("h").as("score_ppm")))
   }
 
   /** Stationary distribution of a finite Markov chain by integer power
@@ -461,53 +335,59 @@ object Graph {
     require(iters >= 1 && iters <= 50, s"stationaryDistribution: iters in [1,50], got $iters")
     import org.apache.spark.sql.types.DecimalType
     val dec = DecimalType(38, 0)
-    val sc = trans.sparkSession.sparkContext
     // the projected transition relation feeds THREE chains before the
     // rounds start (states' distinct, the known-state gate, and the
     // dangling anti-join reads the gate again) — unpinned, the whole
     // upstream derivation (for q261: a window over the events corpus)
     // re-executed per consumer; pin it once (the q37 multi-consumer
     // shape), freed with the transition pin after the rounds
-    val (t0, t0Ids) = checkpointTracked(
+    val t0 = Pin(
       trans.select(col(fromCol).cast("string").as("__f"),
-        col(toCol).cast("string").as("__t"), col(probPpbCol).cast("long").as("__p")))
-    // states = every from-state; transitions gated to known states;
-    // a state whose every outgoing edge leaves the chain (dangling
-    // after the gate) gets an implicit self-loop so its mass persists
-    // instead of annihilating the normalizer — the pageRank dangling-
-    // node treatment. Blocks stay live for the returned lazy relation
-    // (the pageRank contract).
-    val states = checkpointTracked(
-      t0.select(col("__f").as("state")).distinct())._1
-    val gated = t0.join(states.select(col("state").as("__t")), Seq("__t"))
-    val dangling = states
-      .join(gated.select(col("__f").as("state")).distinct(), Seq("state"), "left_anti")
-      .select(col("state").as("__t"), col("state").as("__f"),
-        lit(1000000000L).as("__p"))
-    // pinned on the per-round join key (the hits shape): rounds read
-    // co-partitioned transition blocks, shuffle only state-sized rows
-    val (e, eIds) = pinByKeyTracked(gated.unionByName(dangling), col("__f"))
-    require(e.count() > 0, "stationaryDistribution: no transitions between known states")
-    var pi = states.withColumn("pi_ppm", lit(1000000L))
-    var prevIds = Set.empty[Int]
-    for (i <- 1 to iters) {
-      val (raw, ids) = checkpointTracked(
-        e.join(pi.withColumnRenamed("state", "__f"), Seq("__f"))
-          .groupBy(col("__t").as("state"))
-          .agg(expr("CAST(sum(CAST(pi_ppm AS DECIMAL(38,0)) * __p) div 1000000000 AS BIGINT)")
-            .as("__r")))
-      raw.count()
-      pi = raw
-        .crossJoin(broadcast(raw.agg(sum(col("__r").cast(dec)).as("__s"))))
-        .select(col("state"), expr("CAST(__r * 1000000 div __s AS BIGINT)").as("pi_ppm"))
-      freeIds(sc, prevIds)
-      prevIds = ids
+        col(toCol).cast("string").as("__t"), col(probPpbCol).cast("long").as("__p")),
+      eager = false)
+    var e: Pin = null
+    var prev: Pin = null
+    var done = false
+    try {
+      // states = every from-state; transitions gated to known states;
+      // a state whose every outgoing edge leaves the chain (dangling
+      // after the gate) gets an implicit self-loop so its mass persists
+      // instead of annihilating the normalizer — the pageRank dangling-
+      // node treatment. Blocks stay live for the returned lazy relation
+      // (the pageRank contract).
+      val states = t0.df.select(col("__f").as("state")).distinct().localCheckpoint(false)
+      val gated = t0.df.join(states.select(col("state").as("__t")), Seq("__t"))
+      val dangling = states
+        .join(gated.select(col("__f").as("state")).distinct(), Seq("state"), "left_anti")
+        .select(col("state").as("__t"), col("state").as("__f"),
+          lit(1000000000L).as("__p"))
+      // pinned on the per-round join key (the hits shape): rounds read
+      // co-partitioned transition blocks, shuffle only state-sized rows
+      e = Pin.byKey(gated.unionByName(dangling), col("__f"))
+      require(e.df.count() > 0, "stationaryDistribution: no transitions between known states")
+      var pi = states.withColumn("pi_ppm", lit(1000000L))
+      for (i <- 1 to iters) {
+        val raw = Pin(
+          e.df.join(pi.withColumnRenamed("state", "__f"), Seq("__f"))
+            .groupBy(col("__t").as("state"))
+            .agg(expr("CAST(sum(CAST(pi_ppm AS DECIMAL(38,0)) * __p) div 1000000000 AS BIGINT)")
+              .as("__r")), eager = true)
+        pi = raw.df
+          .crossJoin(broadcast(raw.df.agg(sum(col("__r").cast(dec)).as("__s"))))
+          .select(col("state"), expr("CAST(__r * 1000000 div __s AS BIGINT)").as("pi_ppm"))
+        if (prev != null) prev.free()
+        prev = raw
+      }
+      done = true
+      // the result reads states + the final round's pin, never the
+      // transition pin or the t0 projection
+      states.join(pi, Seq("state"), "left")
+        .select(col("state"), coalesce(col("pi_ppm"), lit(0L)).as("pi_ppm"))
+    } finally {
+      t0.free()
+      if (e != null) e.free()
+      if (!done && prev != null) prev.free()
     }
-    // every round materialized; the result reads states + the final
-    // round's blocks, never the transition pin or the t0 projection
-    freeIds(sc, eIds ++ t0Ids)
-    states.join(pi, Seq("state"), "left")
-      .select(col("state"), coalesce(col("pi_ppm"), lit(0L)).as("pi_ppm"))
   }
 
   /** Degree assortativity coefficient (Newman PRL'02): the Pearson
@@ -537,10 +417,10 @@ object Graph {
     import org.apache.spark.sql.types.DecimalType
     val dec = DecimalType(38, 0)
     val e = edges.select(col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("d"))
-    val bidir = checkpointTracked(
-      e.union(e.select(col("d").as("s"), col("s").as("d")))
-        .filter(col("s") =!= col("d"))
-        .distinct())._1
+    val bidir = e.union(e.select(col("d").as("s"), col("s").as("d")))
+      .filter(col("s") =!= col("d"))
+      .distinct()
+      .localCheckpoint(false)
     val deg = bidir.groupBy(col("s").as("node")).agg(count(lit(1)).as("deg"))
     bidir
       .join(deg.select(col("node").as("s"), col("deg").as("__du")), Seq("s"))
@@ -589,9 +469,9 @@ object Graph {
     // two-consumer shape that otherwise replays the scan+distinct+
     // degree-join chain twice and read bimodally in the bench (the
     // q147 pattern). Pin it so consumers replay blocks, not lineage.
-    val kept = checkpointTracked(
-      e.join(deg.filter(col("__d") <= maxDegree), Seq("__l"))
-        .select(col("__l"), col("__r")))._1
+    val kept = e.join(deg.filter(col("__d") <= maxDegree), Seq("__l"))
+      .select(col("__l"), col("__r"))
+      .localCheckpoint(false)
     kept.select(col("__l"), col("__r").as("a"))
       .join(kept.select(col("__l"), col("__r").as("b")), Seq("__l"))
       .filter(col("a") < col("b"))
@@ -740,17 +620,19 @@ object Graph {
       maxHops: Int): DataFrame = {
     require(maxHops >= 1 && maxHops <= 30,
       s"bfsDistances: maxHops in [1, 30] required, got $maxHops")
-    val sc = edges.sparkSession.sparkContext
     val e = edges.filter(col(aCol).isNotNull && col(bCol).isNotNull)
       .select(col(aCol).as("u"), col(bCol).as("v"))
-    val (bidir, bidirIds) = pinByKeyTracked(
+    val bidir = Pin.byKey(
       e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
         .filter(col("u") =!= col("v")).distinct(), col("u"))
-    var (frontier, frontierIds) = checkpointTracked(
-      seeds.select(col(seedCol).as("id")).filter(col("id").isNotNull).distinct())
-    var (dist, distIds) = checkpointTracked(
-      frontier.select(col("id"), lit(0).as("dist")))
-    var liveIds = bidirIds ++ frontierIds ++ distIds
+    var frontier = Pin(
+      seeds.select(col(seedCol).as("id")).filter(col("id").isNotNull).distinct(),
+      eager = false)
+    var dist = Pin(frontier.df.select(col("id"), lit(0).as("dist")), eager = false)
+    // every pin currently held — pins leave it only when freed, so an
+    // abort anywhere frees everything
+    var live = Set(bidir, frontier, dist)
+    var returned = false
     try {
       var h = 1
       var frontierSize = 1L
@@ -761,33 +643,35 @@ object Graph {
       // round (round i−2's state drops after round i's count proves
       // round i−1's dist materialized); the final round's dist gets
       // one settling count after the loop, before its inputs free.
-      var staleIds = Set.empty[Int]
+      var stale = Set.empty[Pin]
       while (h <= maxHops && frontierSize > 0) {
-        val (next, nextIds) = checkpointTracked(
-          frontier.join(bidir, frontier("id") === bidir("u"))
+        val f = frontier.df
+        val next = Pin(
+          f.join(bidir.df, f("id") === bidir.df("u"))
             .select(col("v").as("id")).distinct()
-            .join(dist, Seq("id"), "left_anti"))
-        liveIds ++= nextIds
-        frontierSize = next.count() // materializes the round (and dist)
-        freeIds(sc, staleIds)
-        liveIds --= staleIds
-        val (nd, ndIds) = checkpointTracked(
-          dist.unionAll(next.select(col("id"), lit(h).as("dist"))))
-        liveIds ++= ndIds
-        staleIds = frontierIds ++ distIds
-        frontier = next; frontierIds = nextIds
-        dist = nd; distIds = ndIds
+            .join(dist.df, Seq("id"), "left_anti"), eager = false)
+        live += next
+        frontierSize = next.df.count() // materializes the round (and dist)
+        stale.foreach(_.free())
+        live --= stale
+        val nd = Pin(dist.df.unionAll(next.df.select(col("id"), lit(h).as("dist"))),
+          eager = false)
+        live += nd
+        stale = Set(frontier, dist)
+        frontier = next
+        dist = nd
         h += 1
       }
-      dist.count() // settle the final lazy union before its inputs free
-      freeIds(sc, staleIds)
-      liveIds --= staleIds
-      dist
+      dist.df.count() // settle the final lazy union before its inputs free
+      stale.foreach(_.free())
+      live --= stale
+      returned = true
+      dist.df
     } finally {
-      // the returned frame's blocks (distIds) stay live; everything
-      // superseded or auxiliary is freed here even on abort — except
-      // bidir, which the caller's action no longer needs either
-      freeIds(sc, liveIds -- distIds)
+      // the returned frame's pin stays live; everything superseded or
+      // auxiliary (bidir included) is freed here, and on an abort no
+      // frame escapes, so dist goes too
+      (if (returned) live - dist else live).foreach(_.free())
     }
   }
 
@@ -821,9 +705,9 @@ object Graph {
     val deg = e.groupBy(col("__l")).agg(count(lit(1)).as("__d"))
     // `kept` has THREE consumers (both self-join sides + the per-item
     // counts) — pin it once instead of replaying the chain three times.
-    val kept = checkpointTracked(
-      e.join(deg.filter(col("__d") <= maxDegree), Seq("__l"))
-        .select(col("__l"), col("__r")))._1
+    val kept = e.join(deg.filter(col("__d") <= maxDegree), Seq("__l"))
+      .select(col("__l"), col("__r"))
+      .localCheckpoint(false)
     val pairs = kept.select(col("__l"), col("__r").as("a"))
       .join(kept.select(col("__l"), col("__r").as("b")), Seq("__l"))
       .filter(col("a") < col("b"))
@@ -874,38 +758,45 @@ object Graph {
       maxRounds: Int = 20): DataFrame = {
     require(k >= 1, s"kCore: k >= 1 required, got $k")
     require(maxRounds >= 1, s"kCore: maxRounds >= 1 required, got $maxRounds")
-    val sc = edges.sparkSession.sparkContext
     val e = edges
       .filter(col(aCol).isNotNull && col(bCol).isNotNull && col(aCol) =!= col(bCol))
       .select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
-    val (bidir, bidirIds) = pinByKeyTracked(
+    val bidir = Pin.byKey(
       e.union(e.select(col("v").as("u"), col("u").as("v"))).distinct(), col("u"))
-    var (active, activeIds) = checkpointTracked(bidir.select(col("u").as("node")).distinct())
-    var n = active.count()
-    var rounds = 0
-    var stable = false
-    while (rounds < maxRounds && !stable) {
-      val (next, nextIds) = checkpointTracked(
-        bidir
-          .join(active.select(col("node").as("u")), Seq("u"), "left_semi")
-          .join(active.select(col("node").as("v")), Seq("v"), "left_semi")
-          .groupBy(col("u").as("node")).agg(count(lit(1)).as("__d"))
-          .filter(col("__d") >= k)
-          .select(col("node")))
-      val m = next.count()
-      freeIds(sc, activeIds)
-      active = next; activeIds = nextIds
-      stable = m == n
-      n = m
-      rounds += 1
+    var active = Pin(bidir.df.select(col("u").as("node")).distinct(), eager = false)
+    var prev = active
+    try {
+      var n = active.df.count()
+      var rounds = 0
+      var stable = false
+      while (rounds < maxRounds && !stable) {
+        val a = active.df
+        prev = active
+        active = Pin(
+          bidir.df
+            .join(a.select(col("node").as("u")), Seq("u"), "left_semi")
+            .join(a.select(col("node").as("v")), Seq("v"), "left_semi")
+            .groupBy(col("u").as("node")).agg(count(lit(1)).as("__d"))
+            .filter(col("__d") >= k)
+            .select(col("node")), eager = false)
+        val m = active.df.count()
+        prev.free()
+        stable = m == n
+        n = m
+        rounds += 1
+      }
+      val a = active.df
+      bidir.df
+        .join(a.select(col("node").as("u")), Seq("u"), "left_semi")
+        .join(a.select(col("node").as("v")), Seq("v"), "left_semi")
+        .groupBy(col("u").as("node")).agg(count(lit(1)).as("core_degree"))
+        .localCheckpoint()
+    } finally {
+      // the returned core is its own eager checkpoint: every pin goes
+      bidir.free()
+      prev.free()
+      active.free()
     }
-    val out = bidir
-      .join(active.select(col("node").as("u")), Seq("u"), "left_semi")
-      .join(active.select(col("node").as("v")), Seq("v"), "left_semi")
-      .groupBy(col("u").as("node")).agg(count(lit(1)).as("core_degree"))
-    val materialized = out.localCheckpoint()
-    freeIds(sc, activeIds ++ bidirIds)
-    materialized
   }
 
   /** Synchronous label-propagation community detection (Raghavan,
@@ -932,35 +823,37 @@ object Graph {
       rounds: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(rounds >= 1 && rounds <= 64, s"labelPropagation: 1 <= rounds <= 64, got $rounds")
-    val sc = edges.sparkSession.sparkContext
     val e = edges.select(col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("d"))
     // pinned on the round join key (the CC co-partition shape)
-    val (bidir, bidirIds) = pinByKeyTracked(
+    val bidir = Pin.byKey(
       e.union(e.select(col("d").as("s"), col("s").as("d")))
         .filter(col("s") =!= col("d"))
         .distinct(), col("d"))
-    var (lbl, lblIds) = checkpointTracked(
-      bidir.select(col("s").as("id")).distinct()
-        .select(col("id"), col("id").as("lbl")))
+    var lbl = Pin(
+      bidir.df.select(col("s").as("id")).distinct()
+        .select(col("id"), col("id").as("lbl")), eager = false)
+    var done = false
     try {
       val w = Window.partitionBy(col("id")).orderBy(col("c").desc, col("lbl"))
       for (_ <- 1 to rounds) {
-        val next = bidir
-          .join(lbl.withColumnRenamed("id", "d"), "d")
-          .select(col("s").as("id"), col("lbl"))
-          .groupBy(col("id"), col("lbl"))
-          .agg(count(lit(1)).as("c"))
-          .withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1)
-          .select(col("id"), col("lbl"))
-        val (ck, ids) = checkpointTracked(next)
-        ck.count() // materialize before freeing the round it reads
-        freeIds(sc, lblIds)
-        lbl = ck
-        lblIds = ids
+        val next = Pin( // materialized before freeing the round it reads
+          bidir.df
+            .join(lbl.df.withColumnRenamed("id", "d"), "d")
+            .select(col("s").as("id"), col("lbl"))
+            .groupBy(col("id"), col("lbl"))
+            .agg(count(lit(1)).as("c"))
+            .withColumn("__rn", row_number().over(w))
+            .filter(col("__rn") === 1)
+            .select(col("id"), col("lbl")), eager = true)
+        lbl.free()
+        lbl = next
       }
-      lbl.select(col("id").as("node"), col("lbl").as("community"))
-    } finally freeIds(sc, bidirIds)
+      done = true
+      lbl.df.select(col("id").as("node"), col("lbl").as("community"))
+    } finally {
+      bidir.free()
+      if (!done) lbl.free()
+    }
   }
 
   /** Personalized (topic-sensitive) PageRank — Haveliwala WWW'02: the
@@ -996,37 +889,36 @@ object Graph {
     require(rankUnit >= 1000000L && rankUnit % 1000000L == 0L &&
       rankUnit <= 1000000000000L,
       s"personalizedPageRank: rankUnit must be a multiple of 1e6 in [1e6, 1e12], got $rankUnit")
-    val sc = edges.sparkSession.sparkContext
     // co-partitioned static relations — the pageRank pin shape
-    val e = pinByKey(
+    val e = Pin.byKey(
       edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
         .distinct(), col("__src"))
-    val deg = pinEagerTracked(
-      e.groupBy(col("__src")).agg(count(lit(1)).as("__deg")))._1
-    val sd = seeds.select(col(seedCol).as("__src")).distinct()
-      .join(deg.select(col("__src")), Seq("__src"), "left_semi")
-    val nSeeds = sd.count()
-    require(nSeeds > 0, "personalizedPageRank: no seed appears in the graph")
-    require(rankUnit / nSeeds >= 100L,
-      s"personalizedPageRank: rankUnit=$rankUnit gives only ${rankUnit / nSeeds} units " +
-        s"per seed for $nSeeds seeds (need >= 100); raise rankUnit")
-    val seedMark = broadcast(sd.select(col("__src").as("node"), lit(1L).as("__seed")))
-    val baseS = (rankUnit / 1000000L * (1000000L - dampPpm)) / nSeeds
-    var r = deg.select(col("__src").as("node"))
-      .join(seedMark, Seq("node"), "left")
-      .select(col("node"),
-        when(col("__seed").isNotNull, lit(rankUnit / nSeeds)).otherwise(lit(0L))
-          .as("rank_ppm"))
-    var ckIds = Set.empty[Int]
+    var deg: Pin = null
+    var ck: Pin = null
     try {
+      deg = Pin(e.df.groupBy(col("__src")).agg(count(lit(1)).as("__deg")), eager = true)
+      val sd = seeds.select(col(seedCol).as("__src")).distinct()
+        .join(deg.df.select(col("__src")), Seq("__src"), "left_semi")
+      val nSeeds = sd.count()
+      require(nSeeds > 0, "personalizedPageRank: no seed appears in the graph")
+      require(rankUnit / nSeeds >= 100L,
+        s"personalizedPageRank: rankUnit=$rankUnit gives only ${rankUnit / nSeeds} units " +
+          s"per seed for $nSeeds seeds (need >= 100); raise rankUnit")
+      val seedMark = broadcast(sd.select(col("__src").as("node"), lit(1L).as("__seed")))
+      val baseS = (rankUnit / 1000000L * (1000000L - dampPpm)) / nSeeds
+      var r = deg.df.select(col("__src").as("node"))
+        .join(seedMark, Seq("node"), "left")
+        .select(col("node"),
+          when(col("__seed").isNotNull, lit(rankUnit / nSeeds)).otherwise(lit(0L))
+            .as("rank_ppm"))
       for (i <- 1 to iters) {
-        val inflow = e
+        val inflow = e.df
           .join(r.withColumnRenamed("node", "__src"), "__src")
-          .join(deg, "__src")
+          .join(deg.df, "__src")
           .select(col("__dst"), expr("rank_ppm div __deg").as("__c"))
           .groupBy(col("__dst"))
           .agg(sum(col("__c")).as("__s"))
-        r = deg.select(col("__src").as("node"))
+        r = deg.df.select(col("__src").as("node"))
           .join(inflow.withColumnRenamed("__dst", "node"), Seq("node"), "left")
           .join(seedMark, Seq("node"), "left")
           .select(col("node"),
@@ -1034,16 +926,16 @@ object Graph {
               expr(s"${dampPpm}L * coalesce(__s, 0L) div 1000000L"))
               .as("rank_ppm"))
         if (i % 5 == 0 && i < iters) {
-          val (ck, ids) = checkpointTracked(r)
-          ck.count()
-          freeIds(sc, ckIds)
-          ckIds = ids
-          r = ck
+          val next = Pin(r, eager = true)
+          if (ck != null) ck.free()
+          ck = next
+          r = next.df
         }
       }
       r
     } catch {
-      case t: Throwable => freeIds(sc, ckIds); throw t
+      // on success e, deg and the last cadence pin back the result
+      case t: Throwable => Seq(e, deg, ck).foreach(p => if (p != null) p.free()); throw t
     }
   }
 
@@ -1082,20 +974,20 @@ object Graph {
       maxHops: Int): DataFrame = {
     require(maxHops >= 1 && maxHops <= 30,
       s"weightedShortestPaths: maxHops in [1, 30] required, got $maxHops")
-    val sc = edges.sparkSession.sparkContext
     val e0 = edges
       .filter(col(srcCol).isNotNull && col(dstCol).isNotNull && col(weightCol).isNotNull)
       .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"),
         col(weightCol).cast("long").as("w"))
-    val (adj, adjIds) = pinByKeyTracked(
+    val adj = Pin.byKey(
       e0.unionAll(e0.select(col("v").as("u"), col("u").as("v"), col("w")))
         .filter(col("u") =!= col("v"))
         .groupBy(col("u"), col("v")).agg(min(col("w")).as("w")), col("u"))
-    var (dist, distIds) = checkpointTracked(
+    var dist = Pin(
       seeds.select(col(seedCol).cast("long").as("id")).filter(col("id").isNotNull)
-        .distinct().select(col("id"), lit(0L).as("dist")))
-    var (frontier, frontierIds) = checkpointTracked(dist)
-    var liveIds = adjIds ++ distIds ++ frontierIds
+        .distinct().select(col("id"), lit(0L).as("dist")), eager = false)
+    var frontier = Pin(dist.df, eager = false)
+    // every pin currently held (the bfsDistances discipline)
+    var live = Set(adj, dist, frontier)
     var returned = false
     try {
       var h = 1
@@ -1103,45 +995,40 @@ object Graph {
       // one action per round — the bfsDistances lazy-dist discipline
       // (see there): the new dist stays lazy, materialized by the next
       // round's improved.count(); frees defer one round
-      var staleIds = Set.empty[Int]
+      var stale = Set.empty[Pin]
       while (h <= maxHops && frontierSize > 0) {
-        val relaxed = frontier.join(adj, frontier("id") === adj("u"))
+        val f = frontier.df
+        val relaxed = f.join(adj.df, f("id") === adj.df("u"))
           .select(col("v").as("id"), (col("dist") + col("w")).as("__cand"))
           .groupBy(col("id")).agg(min(col("__cand")).as("__cand"))
-        val (improved, improvedIds) = checkpointTracked(
-          relaxed.join(dist.withColumnRenamed("dist", "__old"), Seq("id"), "left")
+        val improved = Pin(
+          relaxed.join(dist.df.withColumnRenamed("dist", "__old"), Seq("id"), "left")
             .filter(col("__old").isNull || col("__cand") < col("__old"))
-            .select(col("id"), col("__cand").as("dist")))
-        liveIds ++= improvedIds
-        frontierSize = improved.count() // materializes the round (and dist)
-        freeIds(sc, staleIds)
-        liveIds --= staleIds
-        val (nd, ndIds) = checkpointTracked(
-          dist.join(improved.select(col("id")), Seq("id"), "left_anti")
-            .unionAll(improved))
-        liveIds ++= ndIds
-        staleIds = frontierIds ++ distIds
-        frontier = improved; frontierIds = improvedIds
-        dist = nd; distIds = ndIds
+            .select(col("id"), col("__cand").as("dist")), eager = false)
+        live += improved
+        frontierSize = improved.df.count() // materializes the round (and dist)
+        stale.foreach(_.free())
+        live --= stale
+        val nd = Pin(
+          dist.df.join(improved.df.select(col("id")), Seq("id"), "left_anti")
+            .unionAll(improved.df), eager = false)
+        live += nd
+        stale = Set(frontier, dist)
+        frontier = improved
+        dist = nd
         h += 1
       }
-      dist.count() // settle the final lazy union before its inputs free
-      freeIds(sc, staleIds)
-      liveIds --= staleIds
+      dist.df.count() // settle the final lazy union before its inputs free
+      stale.foreach(_.free())
+      live --= stale
       returned = true
-      dist.select(col("id").as("node"), col("dist"))
+      dist.df.select(col("id").as("node"), col("dist"))
     } finally {
-      // On success the returned frame's blocks stay live; on an abort
-      // no frame escapes, so the current dist checkpoint is freed too
-      // (otherwise its blocks leak on the failure path).
-      freeIds(sc, if (returned) liveIds -- distIds else liveIds)
+      // On success the returned frame's pin stays live; on an abort no
+      // frame escapes, so the current dist pin is freed too.
+      (if (returned) live - dist else live).foreach(_.free())
     }
   }
-
-  /** Serializes the persistent-RDD id diff in [[checkpointTracked]]
-    * across graft threads (see the CAVEAT in [[connectedComponents]]).
-    */
-  private val checkpointLock = new Object
 
   /** Newman modularity of a node partition (Newman & Girvan, PRE'04):
     * per community c, the contribution e_c/m − (d_c/2m)² where e_c is
@@ -1192,23 +1079,4 @@ object Graph {
           "CAST(d_c AS DECIMAL(38,0)) * d_c) * 1000000 div " +
           "(CAST(4 AS DECIMAL(38,0)) * m * m) AS BIGINT)").as("q_ppm"))
   }
-
-  /** Lazy localCheckpoint + the persistent-RDD ids it registered, captured
-    * under [[checkpointLock]] so concurrent graft checkpoints don't
-    * mis-attribute each other's ids. Blocks materialize at the caller's
-    * next action, outside the lock (no Spark job runs while it is held).
-    */
-  private[ext] def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) =
-    checkpointLock.synchronized {
-      val sc = df.sparkSession.sparkContext
-      val pre = sc.getPersistentRDDs.keySet
-      val out = df.localCheckpoint(eager = false)
-      (out, sc.getPersistentRDDs.keySet.diff(pre).toSet)
-    }
-
-  /** Explicitly drop checkpoint blocks the ContextCleaner would otherwise
-    * hold until a driver GC proves them unreachable.
-    */
-  private[ext] def freeIds(sc: org.apache.spark.SparkContext, ids: Set[Int]): Unit =
-    ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
 }

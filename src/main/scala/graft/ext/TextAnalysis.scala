@@ -700,7 +700,6 @@ object TextAnalysis {
       s"bpeTrain: 1 <= rounds <= 4096 required, got $rounds")
     require(maxTrainDocs >= 1, s"bpeTrain: maxTrainDocs >= 1, got $maxTrainDocs")
     val ss = df.sparkSession
-    val sc = ss.sparkContext
     val D = "\u0001"
     val toks = TextHash.tokens(text)
     val trainable = df.filter(text.isNotNull && size(toks) >= 2)
@@ -719,9 +718,9 @@ object TextAnalysis {
     // run every round's pair-count job single-threaded. Spread it across
     // the cluster once at checkpoint — round-robin is fine, the rounds
     // are pure per-row maps + a global aggregate.
-    var (docs, docsIds) = Graph.checkpointTracked(
+    var docs = Pin(
       trainable.select(concat(lit(D), array_join(toks, D + D), lit(D)).as("s"))
-        .repartition(math.min(8, ss.sparkContext.defaultParallelism)))
+        .repartition(math.min(8, ss.sparkContext.defaultParallelism)), eager = false)
     val merges =
       scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, String, Long)]
     // One relation-wide job per round, not two: each round's best-pair
@@ -733,7 +732,7 @@ object TextAnalysis {
     // table is the output), so it is not even constructed — together
     // that is R+1 full passes over the training relation instead of
     // 2R+1 for the same merges.
-    var pendingFree = Set.empty[Int]
+    var pendingFree: Option[Pin] = None
     try {
       var r = 1
       var exhausted = false
@@ -743,7 +742,7 @@ object TextAnalysis {
           slice(tArr, lit(1), size(tArr) - 1),
           slice(tArr, lit(2), size(tArr) - 1),
           (a, b) => struct(a.as("a"), b.as("b")))
-        val best = docs
+        val best = docs.df
           .select(explode(pairs).as("__p"))
           .select(col("__p.a").as("a"), col("__p.b").as("b"))
           .groupBy(col("a"), col("b"))
@@ -751,25 +750,27 @@ object TextAnalysis {
           .orderBy(col("n").desc, col("a"), col("b"))
           .limit(1)
           .collect() // materializes the current generation's checkpoint
-        Graph.freeIds(sc, pendingFree) // previous generation fully consumed
-        pendingFree = Set.empty
+        pendingFree.foreach(_.free()) // previous generation fully consumed
+        pendingFree = None
         if (best.isEmpty) exhausted = true
         else {
           val a = best.head.getString(0)
           val b = best.head.getString(1)
           merges += ((r.toLong, a, b, a + " " + b, best.head.getLong(2)))
           if (r < rounds) {
-            val (next, nextIds) = Graph.checkpointTracked(docs.select(
+            val next = Pin(docs.df.select(
               replace(col("s"),
-                lit(D + a + D + D + b + D), lit(D + a + " " + b + D)).as("s")))
-            pendingFree = docsIds
+                lit(D + a + D + D + b + D), lit(D + a + " " + b + D)).as("s")), eager = false)
+            pendingFree = Some(docs)
             docs = next
-            docsIds = nextIds
           }
         }
         r += 1
       }
-    } finally Graph.freeIds(sc, docsIds ++ pendingFree)
+    } finally {
+      docs.free()
+      pendingFree.foreach(_.free())
+    }
     import ss.implicits._
     merges.toSeq.toDF("round", "a", "b", "merged", "n")
   }

@@ -3,7 +3,7 @@ package graft.jobs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.etl.Pipeline
-import graft.ext.{Dedup, Dsir, LangModel, Packing, Sampling, TextAnalysis}
+import graft.ext.{Dedup, Dsir, LangModel, Packing, Pin, Sampling, TextAnalysis}
 
 /** End-to-end corpus curation: the library's training-data operators
   * composed into one runnable pipeline —
@@ -104,6 +104,15 @@ object CurateJob {
       afterNearDup: Long, afterBalance: Long, chunks: Long)
 
   def run(spark: SparkSession, conf: Map[String, String]): Report = {
+    // every checkpoint the run takes, or reads through an operator's
+    // result, is consumed before the Report's counts exist: free them
+    // here instead of waiting for a driver GC
+    val owned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    try curate(spark, conf, owned) finally owned.foreach(Pin.freeBehind)
+  }
+
+  private def curate(spark: SparkSession, conf: Map[String, String],
+      owned: scala.collection.mutable.Buffer[DataFrame]): Report = {
     val source = conf("source")
     val dest = conf("dest")
     val minWords = conf.getOrElse("min-words", "20").toInt
@@ -186,6 +195,7 @@ object CurateJob {
       // dedup, shingling, cluster join) scan this relation; recomputing
       // the scrub regexes per scan would triple the dominant cost
       .localCheckpoint(false)
+    owned += quality
     val nQuality = quality.count()
 
     // 1b. optional content gates: token-exact blocklist (anti-join on
@@ -235,6 +245,7 @@ object CurateJob {
     // same checkpoint rationale as the quality stage — but only when a
     // gate actually rewrote the relation
     val gated = if (gatesOn) gated0.localCheckpoint(false) else gated0
+    if (gatesOn) owned += gated
     val nGates = if (gatesOn) gated.count() else nQuality
 
     // 1d. optional pre-dedup duplication report (q181/q182's operators):
@@ -255,12 +266,14 @@ object CurateJob {
     val canon = Dedup.exact(gated, col("text"), col("doc_id"))
     val exact = gated.join(canon.select(col("keep_id").as("doc_id")), Seq("doc_id"))
       .localCheckpoint(false)
+    owned += exact
     val nExact = exact.count()
 
     // 3. near-dup clustering on the survivors; keep cluster canonicals.
     //    Docs in no near-dup pair are their own canonical (left anti).
     val clusters = Dedup.nearDupClusters(exact, "doc_id", "text",
       shingleSize = 3, threshold = threshold)
+    owned += clusters
     val nonCanonical = clusters.filter(!col("is_canonical")).select("doc_id")
     val deduped = exact.join(nonCanonical, Seq("doc_id"), "left_anti")
     val nNearDup = deduped.count()

@@ -3,7 +3,7 @@ package graft.jobs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.multimodal.Media
-import graft.ext.Graph
+import graft.ext.{Graph, Pin}
 
 /** End-to-end MULTIMODAL curation: the media twin of [[CurateJob]],
   * composing the oracle-checked decode / QA / perceptual-dedup
@@ -50,6 +50,15 @@ object MediaCurateJob {
       images: Long, audio: Long, videos: Long)
 
   def run(spark: SparkSession, conf: Map[String, String]): Report = {
+    // every checkpoint the run takes, or reads through an operator's
+    // result, is consumed before the Report's counts exist: free them
+    // here instead of waiting for a driver GC
+    val owned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    try curate(spark, conf, owned) finally owned.foreach(Pin.freeBehind)
+  }
+
+  private def curate(spark: SparkSession, conf: Map[String, String],
+      owned: scala.collection.mutable.Buffer[DataFrame]): Report = {
     val source = conf("source")
     val dest = conf("dest")
     val fmt = JobArgs.checkFormat(conf.getOrElse("format", "parquet"))
@@ -90,11 +99,13 @@ object MediaCurateJob {
       .select(col("media_id"), col("__p.fmt").as("fmt"),
         col("__p.width").as("width"), col("__p.height").as("height"))
       .localCheckpoint()
+    owned += imgStats
     val audStats = Media.audioStats(aud, "media_id", "payload")
       .withColumn("clip_ppm",
         when(col("n_samples") > 0L, expr("clip_count * 1000000L div n_samples"))
           .otherwise(lit(0L)))
       .localCheckpoint()
+    owned += audStats
     val vidStats = vid
       .select(col("media_id"),
         // container-agnostic: AVI DIB/MJPG and Motion-JPEG MP4 all
@@ -111,6 +122,7 @@ object MediaCurateJob {
           "aggregate(f.gray, 0L, (b, x) -> b + x) div size(f.gray)) " +
           "div size(__v.frames)").as("mean_luma"))
       .localCheckpoint()
+    owned += vidStats
     // each stage count computed ONCE into a local val and reused by
     // both the Report and the summary rows below
     val nImgStats = imgStats.count()
@@ -134,6 +146,7 @@ object MediaCurateJob {
     //    pair, so singletons pass through the anti-join untouched.
     def dropDupes(kept: DataFrame, pairs: DataFrame): DataFrame = {
       val comp = Graph.connectedComponents(pairs, "id_a", "id_b")
+      owned += comp
       val losers = comp.filter(col("id") =!= col("comp"))
         .select(col("id").as("media_id"))
       kept.join(losers, Seq("media_id"), "left_anti")
@@ -173,6 +186,7 @@ object MediaCurateJob {
     val vidMeta = Media.videoContainerStats(vid, "media_id", "payload")
       .join(vidStats.select("media_id"), Seq("media_id"), "left_anti")
       .localCheckpoint() // feeds gate, dedup, write, and 3 counters
+    owned += vidMeta
     val nVidMeta = vidMeta.count()
     val vidMetaOk = vidMeta.filter(col("n_frames") >= minFrames)
     val nVidMetaOk = vidMetaOk.count()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.{GraftSession, SparkEntry}
 
 /** Dev tool: print the formatted physical plan of named catalog queries.
@@ -8,11 +7,7 @@ import graft.{GraftSession, SparkEntry}
   */
 object ExplainTool {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.tuned(SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")).getOrCreate()
+    val spark = GraftSession.local("graft-explain", 4)
     spark.sparkContext.setLogLevel("ERROR")
     args.drop(1).foreach { name =>
       println(s"===== $name =====")

@@ -22,6 +22,8 @@ class JobsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def tmp(): String = Files.createTempDirectory("graft-jobs").toString
 
+  private def persistent: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
   override def beforeAll(): Unit = {
     val conn = DriverManager.getConnection(url)
     val st = conn.createStatement()
@@ -208,7 +210,9 @@ class JobsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "splits" -> "train:0.8,val:0.2",
       "chunk-window" -> "40", "chunk-overlap" -> "10",
       "shards" -> "4", "batch-size" -> "8")
+    val persistentBefore = persistent
     val r = CurateJob.run(spark, conf)
+    assert(persistent -- persistentBefore == Set.empty, "run left checkpoint blocks behind")
     assert(r.input > 0)
     assert(r.afterQuality <= r.input)
     assert(r.afterGates == r.afterQuality, "no gates configured — stage is identity")
@@ -395,7 +399,9 @@ class JobsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "min-dim" -> "8", "min-duration-ms" -> "10", "max-clip-ppm" -> "300000",
       "min-frames" -> "2", "min-luma" -> "16", "max-luma" -> "240",
       "every" -> "2")
+    val persistentBefore = persistent
     val r = MediaCurateJob.run(spark, conf)
+    assert(persistent -- persistentBefore == Set.empty, "run left checkpoint blocks behind")
     assert(r.input == 17L && r.decodable == 14L && r.afterQa == 9L)
     assert(r.afterNearDup == 6L && r.images == 2L && r.audio == 2L && r.videos == 2L)
     val vidOut = spark.read.parquet(s"$dest/media/video")
